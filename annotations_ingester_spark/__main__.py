@@ -4,8 +4,14 @@ Mirrors the reference's CLI (reference: ingester/__main__.py:34-45 arg
 parsing + config validation; :128-129 ``index_range`` execution) but wires
 a Spark plan instead of a thread pool:
 
-  config → PipelineConfig → source read → AnnotationPipeline.windowed/flat
-         → sink write (parquet or Elasticsearch backend).
+  config → PipelineConfig → pre-flight → source.read → range_filter (dated)
+         → AnnotationPipeline.flat | .nested (per segment with --segmented)
+         → sink.write
+
+``source``/``sink`` are ``sources.backend`` objects (parquet, the ES
+connector jar, or the jar-free ES REST fallback), picked by the config's
+``backend:`` key; ``--stream`` runs the same flat plan as an availableNow
+stream whose ``foreachBatch`` is ``sink.write``.
 """
 
 from __future__ import annotations
@@ -33,8 +39,11 @@ def main(argv: list[str] | None = None) -> int:
 
     from annotations_ingester_spark.annotator.service import HttpNlpClient
     from annotations_ingester_spark.config import PipelineConfig
+    from annotations_ingester_spark.operators.filters import range_filter
+    from annotations_ingester_spark.operators.windows import date_windows
     from annotations_ingester_spark.plans.pipeline import AnnotationPipeline
     from annotations_ingester_spark.session import get_spark
+    from annotations_ingester_spark.sources.backend import BACKENDS, ParquetBackend
     from annotations_ingester_spark.utils import check_url_available
 
     cfg = PipelineConfig.from_yaml(args.config)
@@ -54,28 +63,43 @@ def main(argv: list[str] | None = None) -> int:
     date_start = args.date_start or cfg.date_start
     date_end = args.date_end or cfg.date_end
 
+    dated = bool(date_start and date_end)
+    nested = cfg.ingest_mode == "nested"
+    upsert = cfg.ingest_mode == "same-index"
+    source = BACKENDS[cfg.source.backend](cfg.source)
+    sink = BACKENDS[cfg.sink.backend](cfg.sink)
+
+    if args.stream and not isinstance(source, ParquetBackend):
+        print("--stream requires the file-based parquet source backend", file=sys.stderr)
+        return 2
+    if args.segmented and nested:
+        # segments track flat-row overlap semantics; silently running
+        # nested un-segmented would betray the flag — refuse loudly (same
+        # philosophy as the date-format refusal)
+        print(
+            "--segmented is not supported with ingest-mode=nested; "
+            "run the whole span (the J1 skip-processed anti-join "
+            "makes reruns idempotent)",
+            file=sys.stderr,
+        )
+        return 2
+
     nlp = cfg.nlp
     fake_mode = bool(nlp.endpoints) and nlp.endpoints[0].startswith("fake://")
 
-    # S11 pre-flight: refuse to start against a dead NLP service
+    # S11 pre-flight: refuse to start against a dead NLP service or an
+    # unusable ES endpoint (the REST backend's version handshake) before
+    # any Spark job is planned — the reference's check_url_available
+    # posture (utils.py:7-14)
     if nlp.endpoints and not fake_mode and not check_url_available(nlp.endpoints):
         print("NLP endpoints unavailable", file=sys.stderr)
         return 2
-
-    # S11 pre-flight for the jar-free ES REST backend: the version
-    # handshake (GET / + the 8.x X-Elastic-Product header check) fails
-    # fast on an unreachable, pre-7.x, or lookalike server before any
-    # Spark job is planned — the reference's check_url_available posture
-    # (utils.py:7-14) upgraded to the official client handshake.
-    for end in (cfg.source, cfg.sink):
-        if end.backend == "elasticsearch-rest":
-            from annotations_ingester_spark.sources.es_rest import EsRestClient
-
-            try:
-                EsRestClient(end).verify_compat()
-            except Exception as exc:
-                print(f"Elasticsearch endpoint check failed: {exc}", file=sys.stderr)
-                return 2
+    for end in (source, sink):
+        try:
+            end.check()
+        except Exception as exc:
+            print(f"Elasticsearch endpoint check failed: {exc}", file=sys.stderr)
+            return 2
 
     spark = get_spark("annotations_ingester_spark")
 
@@ -99,146 +123,8 @@ def main(argv: list[str] | None = None) -> int:
                 rate_limit_per_sec=nlp.rate_limit_per_sec,
             )
 
-    pipe = AnnotationPipeline(
-        annotator,
-        text_field=cfg.text_field,
-        docid_field=cfg.docid_field,
-        persist_fields=cfg.persist_fields,
-        mode="gate" if cfg.nlp.mode == "gate-nlp" else "medcat",
-        date_field=cfg.date_field,
-        ann_id_field=cfg.annotation_id_field,
-    )
-
-    if cfg.source.backend == "elasticsearch":
-        from annotations_ingester_spark.sources.elasticsearch import read_es
-
-        docs = read_es(spark, cfg.source)
-    elif cfg.source.backend == "elasticsearch-rest":
-        # jar-free fallback: sliced-scroll parallel read; schema from a
-        # bounded sample (ES dynamic-mapping parity). A configured date
-        # span pushes down into the scroll query (S3 parity,
-        # es_common.py:303-330) — out-of-range docs never leave the
-        # cluster; segmented runs re-filter Spark-side within the span
-        from annotations_ingester_spark.sources.es_rest import (
-            infer_es_rest_schema,
-            read_es_rest,
-        )
-
-        rng = None
-        if date_start and date_end:
-            rng = {
-                "range": {
-                    cfg.date_field: {
-                        "gte": date_start,
-                        "lte": date_end,
-                        "format": "yyyy-MM-dd",
-                    }
-                }
-            }
-        docs = read_es_rest(
-            spark, cfg.source, infer_es_rest_schema(spark, cfg.source), query=rng
-        )
-    else:
-        docs = spark.read.parquet(cfg.source.index_name)
-
-    def sink_processed_ids():
-        """J1 resume (reference skip-processed-doc-check, config.yml:68 /
-        annotations_indexer.py:309-324): distinct already-written doc ids
-        read back from the sink; None on first run. The anti-join
-        broadcasts when small, shuffles both sides keyed on the id
-        otherwise — never a driver-side id list."""
-        if not cfg.skip_processed_doc_check:
-            return None
-        from pyspark.sql import functions as Fn
-
-        from annotations_ingester_spark.sinks.writers import _is_path_missing
-
-        try:
-            if cfg.sink.backend == "elasticsearch":
-                from annotations_ingester_spark.sources.elasticsearch import read_es as _r
-
-                written = _r(spark, cfg.sink)
-            elif cfg.sink.backend == "elasticsearch-rest":
-                from pyspark.sql import types as T
-
-                from annotations_ingester_spark.sources.es_rest import (
-                    EsRestClient,
-                    read_es_rest,
-                )
-
-                # resume needs ONLY the id column: a 1-doc sample picks the
-                # column name and type, then a narrow sliced-scroll read
-                # fetches just that field (no full-schema inference — the
-                # annotation rows carry map-typed fields that don't need to
-                # round-trip here)
-                sample = EsRestClient(cfg.sink).search_page(size=1)
-                if not sample:
-                    return None  # absent or empty sink index — first run
-                for done_col in (f"meta.{cfg.docid_field}", cfg.docid_field):
-                    if done_col in sample[0]:
-                        typ = (
-                            T.LongType()
-                            if isinstance(sample[0][done_col], int)
-                            else T.StringType()
-                        )
-                        written = read_es_rest(
-                            spark,
-                            cfg.sink,
-                            T.StructType([T.StructField(done_col, typ)]),
-                        )
-                        return written.select(
-                            Fn.col(f"`{done_col}`").alias(cfg.docid_field)
-                        ).distinct()
-                return None
-            else:
-                written = spark.read.parquet(cfg.sink.index_name)
-        except Exception as exc:
-            # ONLY sink-never-written counts as first run; a corrupt or
-            # unreadable sink must propagate — treating it as first-run
-            # would silently reprocess (and, on parquet append, duplicate)
-            # the whole corpus
-            # an absent or empty REST sink index is equally a first run
-            if (
-                _is_path_missing(exc)
-                or "index_not_found" in str(exc)
-                or "returned no documents" in str(exc)
-            ):
-                return None
-            raise
-        # flat sinks carry the doc id as meta.<docid>; the W4 nested sink
-        # keeps the bare docid groupBy key
-        for done_col in (f"meta.{cfg.docid_field}", cfg.docid_field):
-            if done_col in written.columns:
-                return written.select(
-                    Fn.col(f"`{done_col}`").alias(cfg.docid_field)
-                ).distinct()
-        return None
-
-    def write_out(out) -> None:
-        if cfg.sink.backend == "elasticsearch":
-            from annotations_ingester_spark.sources.elasticsearch import write_es
-
-            write_es(
-                out,
-                cfg.sink,
-                split_suffix_field="index_suffix" if cfg.split_index_by_field else None,
-                upsert=cfg.ingest_mode == "same-index",
-            )
-        elif cfg.sink.backend == "elasticsearch-rest":
-            from annotations_ingester_spark.sources.es_rest import write_es_rest
-
-            write_es_rest(
-                out,
-                cfg.sink,
-                split_suffix_field="index_suffix" if cfg.split_index_by_field else None,
-                upsert=cfg.ingest_mode == "same-index",
-            )
-        elif cfg.split_index_by_field:
-            from annotations_ingester_spark.sinks.writers import write_partitioned
-
-            write_partitioned(out, cfg.sink.index_name)  # W2 physical partitioning
-        else:
-            out.write.mode("append").parquet(cfg.sink.index_name)
+    mode = "gate" if nlp.mode == "gate-nlp" else "medcat"
+    docs = source.read(spark, cfg.date_field, date_start, date_end)
 
     if args.stream:
         # S7: the same flat plan as a checkpointed availableNow stream —
@@ -248,150 +134,65 @@ def main(argv: list[str] | None = None) -> int:
             stream_annotations,
         )
 
-        if cfg.source.backend == "elasticsearch":
-            print("--stream requires a file-based source backend", file=sys.stderr)
-            return 2
-        schema = spark.read.parquet(cfg.source.index_name).schema
         out = stream_annotations(
             spark,
             cfg.source.index_name,
-            schema,
+            docs.schema,
             annotator,
             text_field=cfg.text_field,
             docid_field=cfg.docid_field,
-            mode="gate" if nlp.mode == "gate-nlp" else "medcat",
+            mode=mode,
         )
         if args.dry_run:
             out.explain("formatted")
             return 0
-        if cfg.sink.backend == "elasticsearch":
-            from annotations_ingester_spark.sources.elasticsearch import es_foreach_batch
-
-            batch_fn = es_foreach_batch(cfg.sink, upsert=cfg.ingest_mode == "same-index")
-        elif cfg.sink.backend == "elasticsearch-rest":
-            from annotations_ingester_spark.sources.es_rest import write_es_rest
-
-            def batch_fn(batch, epoch_id):
-                # deterministic row ids make micro-batch replay idempotent
-                write_es_rest(batch, cfg.sink, upsert=cfg.ingest_mode == "same-index")
-        else:
-
-            def batch_fn(batch, epoch_id):
-                batch.write.mode("append").parquet(cfg.sink.index_name)
-
-        # checkpoint placement: path-backed sinks keep it beside the sink;
-        # ES sinks have no filesystem path, so anchor it beside the SOURCE
-        # path (always file-based in stream mode), tagged with the
-        # normalized index name so two streams into different indices
-        # never share offsets
-        if cfg.sink.backend.startswith("elasticsearch"):
-            from annotations_ingester_spark.functions.names import format_index_name
-
-            ckpt = (
-                cfg.source.index_name.rstrip("/")
-                + "_ckpt_"
-                + format_index_name(cfg.sink.index_name)
-            )
-        else:
-            ckpt = cfg.sink.index_name.rstrip("/") + "_ckpt"
-        run_stream_foreach_batch(out, batch_fn, ckpt)
+        run_stream_foreach_batch(
+            out,
+            lambda batch, epoch_id: sink.write(batch, upsert=upsert),
+            sink.stream_checkpoint(cfg.source.index_name),
+        )
         return 0
 
-    if cfg.ingest_mode == "nested":
-        # W4: one row per document with an annotations array (reference
-        # doc_{id}_annotations docs, annotations_indexer.py:166-200)
-        from annotations_ingester_spark.operators.filters import range_filter
-
-        if args.segmented:
-            # the segment loop writes flat columns and tracks flat overlap
-            # semantics; silently running nested un-segmented would betray
-            # the flag — refuse loudly (same philosophy as the date-format
-            # refusal above)
-            print(
-                "--segmented is not supported with ingest-mode=nested; "
-                "run the whole span (the J1 skip-processed anti-join "
-                "makes reruns idempotent)",
-                file=sys.stderr,
-            )
-            return 2
-        scoped = (
-            range_filter(docs, cfg.date_field, date_start, date_end)
-            if date_start and date_end
-            else docs
-        )
-        out = pipe.nested(scoped, processed_ids=sink_processed_ids())
+    pipe = AnnotationPipeline(
+        annotator,
+        text_field=cfg.text_field,
+        docid_field=cfg.docid_field,
+        persist_fields=cfg.persist_fields,
+        mode=mode,
+        date_field=cfg.date_field,
+        ann_id_field=cfg.annotation_id_field,
+    )
+    split = cfg.split_index_by_field or None
+    # B1: --segmented runs one inclusive range scan per date segment
+    # (reference driver loop); every other run is one segment, the whole
+    # span — or the whole corpus when undated
+    segments = (
+        date_windows(date_start, date_end, cfg.batch_interval_days)
+        if args.segmented and dated
+        else [(date_start, date_end)]
+    )
+    done = sink.done_ids(spark, cfg.docid_field) if cfg.skip_processed_doc_check else None
+    processed = done
+    for seg_start, seg_end in segments:
+        scoped = range_filter(docs, cfg.date_field, seg_start, seg_end) if dated else docs
+        if nested:
+            # W4: one row per document with an annotations array
+            # (reference doc_{id}_annotations docs, annotations_indexer.py:166-200)
+            out = pipe.nested(scoped, processed_ids=processed)
+        else:
+            out = pipe.flat(scoped, split_by_field=split, processed_ids=processed)
         if args.dry_run:
             out.explain("formatted")
             return 0
-        if cfg.sink.backend == "elasticsearch":
-            from annotations_ingester_spark.sources.elasticsearch import write_es
-
-            write_es(out, cfg.sink, mapping_id="ann_doc_id", scripted_upsert=True)
-        elif cfg.sink.backend == "elasticsearch-rest":
-            from annotations_ingester_spark.sources.es_rest import write_es_rest
-
-            # doc_as_upsert update replaces the annotations array like the
-            # scripted upsert (merge already happened engine-side, W4)
-            write_es_rest(out, cfg.sink, mapping_id="ann_doc_id", upsert=True)
-        else:
-            from annotations_ingester_spark.sinks.writers import write_nested
-
-            write_nested(out, cfg.sink.index_name)
-        return 0
-
-    if args.segmented and date_start and date_end:
-        # reference driver-loop parity: one inclusive range scan per
-        # segment; consecutive segments share their boundary date, and the
-        # J1 anti-join against already-written ids absorbs the overlap —
-        # so segmented == whole-span (certified in tests/test_cli.py)
-        from annotations_ingester_spark.operators.filters import range_filter
-        from annotations_ingester_spark.operators.windows import date_windows
-
-        processed = sink_processed_ids()
-        for seg_start, seg_end in date_windows(
-            date_start, date_end, cfg.batch_interval_days
-        ):
-            scoped = range_filter(docs, cfg.date_field, seg_start, seg_end)
-            seg_out = pipe.flat(
-                scoped,
-                split_by_field=cfg.split_index_by_field or None,
-                processed_ids=processed,
-            )
-            if args.dry_run:
-                seg_out.explain("formatted")
-                return 0
-            write_out(seg_out)
-            # everything up to this segment's end is now in the sink; only
-            # the shared boundary date overlaps the next segment
-            processed = range_filter(docs, cfg.date_field, date_start, seg_end).select(
-                cfg.docid_field
-            )
-        return 0
-
-    if date_start and date_end:
-        # same column surface as the --segmented loop: a dated whole-span run
-        # with split-index-by-field configured must also carry index_suffix,
-        # or write_out crashes on the missing partition column
-        out = pipe.windowed(
-            docs,
-            date_start,
-            date_end,
-            cfg.batch_interval_days,
-            split_by_field=cfg.split_index_by_field or None,
-            processed_ids=sink_processed_ids(),
-        )
-    else:
-        out = pipe.flat(
-            docs,
-            split_by_field=cfg.split_index_by_field or None,
-            processed_ids=sink_processed_ids(),
-        )
-
-    if args.dry_run:
-        out.explain("formatted")
-        return 0
-
-    write_out(out)
+        sink.write(out, split=bool(split), upsert=upsert, nested=nested)
+        if len(segments) > 1:
+            # consecutive segments share their boundary date: the next one
+            # skips the sink's ids plus every doc up to this segment's end,
+            # so a segmented run equals the whole span (tests/test_cli.py)
+            # and a rerun appends nothing the sink already holds
+            upto = range_filter(docs, cfg.date_field, date_start, seg_end)
+            upto = upto.select(cfg.docid_field)
+            processed = upto if done is None else done.unionByName(upto)
     return 0
 
 

@@ -121,28 +121,3 @@ class DeterministicFakeAnnotator:
             else:
                 out.append(normalize_medcat(medcat_envelope(did, text)))
         return out
-
-
-def medcat_entities_oracle_sql(doc_table_sql: str, doc_id: str = "doc_id", text: str = "text") -> str:
-    """DuckDB CTE body recomputing the fake MedCAT entities: one row per
-    (doc × entity) with columns doc_id, ann_id, cui, tuis, types,
-    pretty_name, detected_name, source_value, start, "end", acc, ts.
-    ``doc_table_sql`` must already apply the MIN_TEXT_LEN filter."""
-    return f"""
-    SELECT
-        d.{doc_id} AS doc_id,
-        e.i AS ann_id,
-        'C' || lpad(((d.{doc_id} * 13 + e.i * 7) % 1000)::VARCHAR, 7, '0') AS cui,
-        'T' || lpad(((d.{doc_id} + e.i) % 100)::VARCHAR, 3, '0') AS tuis,
-        'type' || ((d.{doc_id} + e.i) % 5)::VARCHAR AS types,
-        'concept C' || lpad(((d.{doc_id} * 13 + e.i * 7) % 1000)::VARCHAR, 7, '0') AS pretty_name,
-        replace(lower(substr(d.{text}, ((e.i * 17) % (length(d.{text}) - 4)) + 1, 4)), ' ', '~') AS detected_name,
-        substr(d.{text}, ((e.i * 17) % (length(d.{text}) - 4)) + 1, 4) AS source_value,
-        ((e.i * 17) % (length(d.{text}) - 4))::BIGINT AS ann_start,
-        (((e.i * 17) % (length(d.{text}) - 4)) + 4)::BIGINT AS ann_end,
-        ((d.{doc_id} * 31 + e.i * 17) % 100) / 100.0 AS acc,
-        '{FIXED_TS}' AS ts
-    FROM ({doc_table_sql}) d,
-         (SELECT unnest(range(0, 4)) AS i) e
-    WHERE e.i < length(d.{text}) % 4
-    """

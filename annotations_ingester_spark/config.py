@@ -24,12 +24,12 @@ REQUIRED_TOP_LEVEL = ("source", "nlp-service", "sink", "mapping")
 class ConnectorConfig:
     """Source/sink connector options (reference: ingester/es_common.py:14-43).
 
-    ``backend`` selects parquet (tests/local) or elasticsearch (production);
-    both implement the same reader/writer interface in ``sources``/``sinks``.
+    ``backend`` names one of ``sources.backend.BACKENDS``: parquet
+    (tests/local), the elasticsearch connector jar (production) or the
+    jar-free elasticsearch REST fallback; all three implement the same
+    check/read/done_ids/write interface.
     """
 
-    # "parquet" | "elasticsearch" (connector jar) | "elasticsearch-rest"
-    # (jar-free stdlib REST fallback, sources/es_rest.py)
     backend: str = "parquet"
     hosts: list[str] = field(default_factory=list)
     index_name: str = ""  # ES index or parquet path
@@ -92,6 +92,9 @@ class PipelineConfig:
     @classmethod
     def from_dict(cls, params: dict[str, Any]) -> "PipelineConfig":
         """Build from the reference's YAML dict shape (ingester/__main__.py:100-117)."""
+        # deferred: the backend module imports this one
+        from annotations_ingester_spark.sources.backend import BACKENDS
+
         missing = [k for k in REQUIRED_TOP_LEVEL if k not in params]
         if missing:
             raise ValueError(f"config missing required keys: {missing}")
@@ -113,8 +116,13 @@ class PipelineConfig:
             api_key = creds.get("api-key") or security.get("elastic-api-key")
             if not creds.get("use-api-key", True):
                 api_key = None  # reference flag: basic auth wins
+            backend = sec.get("backend", "elasticsearch" if "es" in sec else "parquet")
+            if backend not in BACKENDS:  # a typo must not fall through to parquet
+                raise ValueError(
+                    f"unknown backend {backend!r}; expected one of {', '.join(BACKENDS)}"
+                )
             return ConnectorConfig(
-                backend=sec.get("backend", "elasticsearch" if "es" in sec else "parquet"),
+                backend=backend,
                 hosts=es.get("hosts", []) or [],
                 index_name=es.get("index-name", es.get("path", "")) or "",
                 username=creds.get("username") or security.get("elastic-user"),

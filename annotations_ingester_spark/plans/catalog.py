@@ -15,10 +15,13 @@ across engines:
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+log = logging.getLogger(__name__)
 
 
 @dataclass
@@ -197,8 +200,9 @@ def run_concurrently(*thunks):
     earlier one's straggler tail). Returns results in submission order.
     ALL futures are awaited even when one fails, so a caller's cleanup
     (``DROP TABLE`` / ``rmtree`` in a ``finally``) never races a
-    still-running write, and every failure is surfaced instead of only
-    the first future's (r12 advice)."""
+    still-running write. The first failure (in submission order) is
+    raised; every other one is logged, so none goes unseen on any
+    supported Python (``ExceptionGroup`` needs 3.11)."""
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
@@ -210,10 +214,10 @@ def run_concurrently(*thunks):
                 results.append(fut.result())
             except Exception as exc:  # await every future before raising
                 errors.append(exc)
-    if len(errors) == 1:
-        raise errors[0]
+    for exc in errors[1:]:
+        log.error("concurrent Spark action also failed", exc_info=exc)
     if errors:
-        raise ExceptionGroup("concurrent Spark actions failed", errors)
+        raise errors[0]
     return results
 
 

@@ -138,16 +138,12 @@ class AnnotationPipeline:
         docs: DataFrame,
         date_start: str,
         date_end: str,
-        interval_days: int = 30,
         **kw,
     ) -> DataFrame:
         """B1-scoped run: restrict the corpus to the window range first
         (pushes to the scan), then annotate. One plan, no driver loop.
 
-        ``**kw`` (e.g. ``split_by_field``) is forwarded to :meth:`flat` so a
-        dated whole-span run produces the same columns as the segmented
-        driver loop — without it, split-index-by-field plus a date range
-        crashed in write_out on the missing ``index_suffix`` column.
+        ``**kw`` (e.g. ``split_by_field``) is forwarded to :meth:`flat`.
         """
         if not self.date_field:
             raise ValueError("date_field not configured")

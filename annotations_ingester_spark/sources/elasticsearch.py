@@ -150,16 +150,3 @@ def write_es(
 ) -> None:
     _require_format(df.sparkSession)
     df.write.format(ES_FORMAT).options(**es_write_options(conf, **kw)).mode(mode).save()
-
-
-def es_foreach_batch(conf: ConnectorConfig, **kw):
-    """S7 streaming bulk sink: a ``foreachBatch`` function bulk-writing each
-    micro-batch through the same option surface as ``write_es`` (batch size
-    10000 / 30 s timeout parity with the reference's streaming_bulk,
-    es_common.py:98-99,191-210). Deterministic ``es.mapping.id`` makes
-    micro-batch replay after failure an idempotent upsert (B2)."""
-
-    def apply(batch: DataFrame, epoch_id: int) -> None:
-        write_es(batch, conf, **kw)
-
-    return apply

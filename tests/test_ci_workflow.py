@@ -38,6 +38,7 @@ def test_workflow_jobs_and_steps():
         s.get("run", "") for s in jobs["test"]["steps"] if isinstance(s, dict)
     )
     assert "pytest tests/" in test_cmds
+    assert "pytest perfbench" in test_cmds  # benchmark self-tests
     assert "tools/parity.py" in test_cmds
     docker_uses = [
         s.get("uses", "") for s in jobs["docker"]["steps"] if isinstance(s, dict)

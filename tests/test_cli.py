@@ -232,3 +232,43 @@ def test_skip_processed_corrupt_sink_propagates(spark, tmp_path):
     p.write_text(_yaml.safe_dump(cfg))
     with pytest.raises(Exception):
         main(["--config", str(p)])
+
+
+def test_segmented_resume_rerun_appends_nothing(spark, tmp_path):
+    """--segmented with skip-processed-doc-check: every segment skips the
+    sink's ids, not only the first — a rerun over an unchanged corpus must
+    leave the sink as it was (segments 2+ used to re-append their docs)."""
+    import yaml as _yaml
+
+    src = _corpus(spark, tmp_path)
+    sink = str(tmp_path / "seg_resume_sink")
+    cfg = _yaml.safe_load(open(_cfg(tmp_path, src, sink)))
+    cfg["mapping"]["source"]["skip-processed-doc-check"] = True
+    p = tmp_path / "cfg_seg_resume.yml"
+    p.write_text(_yaml.safe_dump(cfg))
+    assert main(["--config", str(p), "--segmented"]) == 0
+    first = _row_ids(spark, sink)
+    assert len(first) == len(set(first))
+    assert main(["--config", str(p), "--segmented"]) == 0
+    assert _row_ids(spark, sink) == first
+
+
+def test_stream_refuses_non_parquet_source(spark, tmp_path, capsys):
+    """--stream reads the source as a file stream: an ES source is refused
+    up front (exit 2), before any endpoint is contacted."""
+    import yaml as _yaml
+
+    sink = str(tmp_path / "stream_rest_src_sink")
+    cfg = _yaml.safe_load(open(_cfg(tmp_path, "unused", sink, dated=False)))
+    cfg["source"] = {
+        "backend": "elasticsearch-rest",
+        "hosts": ["http://127.0.0.1:9"],
+        "index-name": "docs",
+    }
+    p = tmp_path / "cfg_stream_rest_src.yml"
+    p.write_text(_yaml.safe_dump(cfg))
+    assert main(["--config", str(p), "--stream"]) == 2
+    assert "--stream" in capsys.readouterr().err
+    import os
+
+    assert not os.path.exists(sink)

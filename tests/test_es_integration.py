@@ -13,6 +13,7 @@ import pytest
 
 from annotations_ingester_spark.config import ConnectorConfig
 from annotations_ingester_spark.sources import elasticsearch as es
+from annotations_ingester_spark.sources.backend import EsConnectorBackend
 
 
 class FakeWriter:
@@ -87,9 +88,9 @@ def test_w3_upsert_writer_contract(spark, captured):
 
 
 def test_s7_streaming_foreach_batch_uses_same_contract(spark, captured):
+    # the CLI stream's foreachBatch is the connector backend's batch write
     df = spark.createDataFrame([("r1",)], "row_id string")
-    fn = es.es_foreach_batch(CONF, upsert=True)
-    fn(df, epoch_id=7)
+    EsConnectorBackend(CONF).write(df, upsert=True)
     assert captured.saved and captured.opts["es.write.operation"] == "upsert"
     assert captured.opts["es.batch.size.entries"] == "10000"
 
