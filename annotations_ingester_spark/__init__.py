@@ -20,6 +20,13 @@ Layout
 - ``plans``      : end-to-end batch pipeline assembly
 - ``streaming``  : Structured Streaming variant
 - ``multimodal`` : binary media columns with typed metadata
+- ``worker_imports`` : per-task zip re-parse fix for Spark Python workers
 """
 
+from annotations_ingester_spark import worker_imports
+
 __version__ = "0.1.0"
+
+# engine closures are pickled by reference to this package, so a worker's
+# first engine task lands here; a no-op outside PySpark workers
+worker_imports.install()

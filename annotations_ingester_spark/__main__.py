@@ -165,12 +165,14 @@ def main(argv: list[str] | None = None) -> int:
     split = cfg.split_index_by_field or None
     # B1: --segmented runs one inclusive range scan per date segment
     # (reference driver loop); every other run is one segment, the whole
-    # span — or the whole corpus when undated
+    # span — or the whole corpus when undated. A one-day span yields no
+    # reference-parity window (date_windows(d, d) == []), so it falls back
+    # to the whole span rather than writing nothing
     segments = (
         date_windows(date_start, date_end, cfg.batch_interval_days)
         if args.segmented and dated
-        else [(date_start, date_end)]
-    )
+        else []
+    ) or [(date_start, date_end)]
     done = sink.done_ids(spark, cfg.docid_field) if cfg.skip_processed_doc_check else None
     processed = done
     for seg_start, seg_end in segments:

@@ -12,6 +12,9 @@ Scale posture: at 100 TB the stage is embarrassingly parallel — no shuffle,
 state, or skew; throughput = executors × per-partition HTTP concurrency.
 Failed calls yield ``entities = NULL`` (not an error), leaving rows
 eligible for reprocessing on the next run (B3 semantics).
+
+Per-task worker cost: see ``worker_imports`` — without it every Python
+task re-parsed pyspark.zip and the spark-core jar (~0.25 s of CPU).
 """
 
 from __future__ import annotations

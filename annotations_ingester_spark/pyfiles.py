@@ -4,7 +4,9 @@ Factories/classes referenced inside mapInPandas closures are pickled *by
 reference* to this package, so executor Python workers must be able to
 import it. On a real cluster that's ``--py-files``; here we zip the package
 once per session and ``addPyFile`` it — making every plan independent of
-the driver process's cwd/PYTHONPATH.
+the driver process's cwd/PYTHONPATH. Importing the package on a worker also
+installs ``worker_imports``' fix, which stops each later task re-parsing
+unchanged zip archives on ``sys.path`` (this zip among them).
 """
 
 from __future__ import annotations

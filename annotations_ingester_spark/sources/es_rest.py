@@ -391,5 +391,7 @@ def read_es_rest(
                     {name: [d.get(name) for d in docs] for name in names}
                 )
 
-    slice_df = spark.range(n).toDF("slice_id").repartition(n, "slice_id")
+    # n partitions of one id each: every task scrolls exactly one slice,
+    # with no exchange (hash placement left tasks empty or serialised)
+    slice_df = spark.range(0, n, 1, n).toDF("slice_id")
     return slice_df.mapInPandas(fetch, schema=schema)

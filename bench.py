@@ -14,6 +14,7 @@ Set SPARK_GRAFT_BASE_SF_DIR="" to skip the second pass.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import sys
@@ -527,6 +528,21 @@ def compute_superlinear_flags(
     return flagged
 
 
+def _fit_name(name: str, sec: float, budget: int) -> str:
+    """``name`` itself when its chunk entry fits ``budget`` characters;
+    otherwise its longest prefix that fits once a short digest of the full
+    name is appended (``prefix~digest``), so a pathologically long query
+    name cannot push a chunk line over the cap, and two long names sharing
+    a prefix stay distinct keys."""
+    if len(json.dumps({name: sec})) + 2 <= budget:
+        return name
+    tag = "~" + hashlib.sha1(name.encode()).hexdigest()[:8]
+    keep = len(name)
+    while keep and len(json.dumps({name[:keep] + tag: sec})) + 2 > budget:
+        keep -= 1
+    return name[:keep] + tag
+
+
 def per_query_chunks(
     timings: dict[str, float], max_line_chars: int = 240
 ) -> list[str]:
@@ -542,7 +558,8 @@ def per_query_chunks(
     survives a tail-keeping capture is a run of complete, parseable lines
     carrying the heaviest per-query rows — the ones regression analysis
     needs most. Every line repeats the metric name and its part index, so
-    a consumer can tell a partial capture from a full one.
+    a consumer can tell a partial capture from a full one. A name too long
+    for any line is shortened by ``_fit_name``, so the cap always holds.
     """
     items = sorted(timings.items(), key=lambda kv: (kv[1], kv[0]))
     groups: list[dict[str, float]] = []
@@ -553,6 +570,7 @@ def per_query_chunks(
     )
     used = envelope
     for name, sec in items:
+        name = _fit_name(name, sec, max_line_chars - envelope)
         entry = len(json.dumps({name: sec})) + 2  # ", " separator slack
         if cur and used + entry > max_line_chars:
             groups.append(cur)

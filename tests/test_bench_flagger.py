@@ -166,6 +166,29 @@ def test_per_query_chunks_tail_window_is_parseable():
         json.loads(line)
 
 
+def test_per_query_chunks_caps_overlong_names():
+    """A single entry longer than the cap minus the line envelope is
+    shortened to a prefix plus a digest of the full name: every line stays
+    under the cap, no row is lost, and two long names that share their
+    prefix stay distinct. Names that fit are emitted unchanged."""
+    import json
+
+    mod = _bench_module()
+    long_a, long_b = "x" * 400 + "_a", "x" * 400 + "_b"
+    timings = {"q_short": 0.5, long_a: 2.0, long_b: 3.0, "é" * 300: 1.0}
+    lines = mod.per_query_chunks(timings)
+    merged: dict[str, float] = {}
+    for line in lines:
+        assert len(line) <= 240, f"chunk line over cap: {len(line)}"
+        merged.update(json.loads(line)["queries"])
+    assert len(merged) == len(timings)
+    assert merged["q_short"] == 0.5
+    assert sorted(merged.values()) == sorted(timings.values())
+    shortened = [k for k in merged if k != "q_short"]
+    assert all(k not in timings and "~" in k for k in shortened)
+    assert sum(k.startswith("xxxx") for k in shortened) == 2
+
+
 def test_headline_names_exist_in_registry():
     """A typo'd or renamed HEADLINE entry would crash the round-close
     bench 40 minutes in (run_suite KeyErrors on the first bad name);

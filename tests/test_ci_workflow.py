@@ -33,13 +33,30 @@ def test_workflow_parses_and_triggers():
 def test_workflow_jobs_and_steps():
     doc = _load()
     jobs = doc["jobs"]
-    assert set(jobs) >= {"test", "docker"}
+    assert set(jobs) >= {"test", "worker-imports", "docker"}
     test_cmds = " ".join(
         s.get("run", "") for s in jobs["test"]["steps"] if isinstance(s, dict)
     )
     assert "pytest tests/" in test_cmds
     assert "pytest perfbench" in test_cmds  # benchmark self-tests
     assert "tools/parity.py" in test_cmds
+    # the zipimport fix's tests on both sides of its CPython < 3.13 guard
+    wi = jobs["worker-imports"]
+    assert wi["strategy"]["matrix"]["python-version"] == ["3.10", "3.13"]
+    wi_steps = [s for s in wi["steps"] if isinstance(s, dict)]
+    assert any(
+        s.get("uses", "").startswith("actions/setup-java")
+        and str(s["with"]["java-version"]) == "17"
+        for s in wi_steps
+    )
+    assert any(
+        s.get("uses", "").startswith("actions/setup-python")
+        and s["with"]["python-version"] == "${{ matrix.python-version }}"
+        for s in wi_steps
+    )
+    wi_cmds = " ".join(s.get("run", "") for s in wi_steps)
+    assert 'pip install -e ".[dev]"' in wi_cmds
+    assert "pytest tests/test_worker_imports.py" in wi_cmds
     docker_uses = [
         s.get("uses", "") for s in jobs["docker"]["steps"] if isinstance(s, dict)
     ]

@@ -67,6 +67,22 @@ def test_segmented_equals_whole_span(spark, tmp_path):
     assert not any(r.startswith("doc-7-") for r in seg_ids)  # P3 filtered
 
 
+def test_segmented_one_day_span(spark, tmp_path, capsys):
+    """date-start == date-end has no reference-parity window; --segmented
+    must still run the span (it used to exit 0 with an empty sink)."""
+    src = _corpus(spark, tmp_path)
+    whole, seg = str(tmp_path / "day_whole"), str(tmp_path / "day_seg")
+    day = ["--date-start", "2020-01-31", "--date-end", "2020-01-31"]
+    assert main(["--config", _cfg(tmp_path, src, whole), *day]) == 0
+    assert main(["--config", _cfg(tmp_path, src, seg), *day, "--segmented"]) == 0
+    seg_ids = _row_ids(spark, seg)
+    assert seg_ids == _row_ids(spark, whole)
+    assert {r.split("-")[1] for r in seg_ids} == {"2", "3"}  # the day's docs
+    dry = str(tmp_path / "day_dry")
+    assert main(["--config", _cfg(tmp_path, src, dry), *day, "--segmented", "--dry-run"]) == 0
+    assert "Physical Plan" in capsys.readouterr().out
+
+
 def test_split_by_field_dated_whole_span(spark, tmp_path):
     """split-index-by-field + a date range must not crash in write_out and
     must match --segmented with the same split config (the dated whole-span

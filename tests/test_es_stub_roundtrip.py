@@ -259,6 +259,28 @@ def test_read_handles_empty_slices_and_empty_index(spark, es_stub):
     assert read_es_rest(spark, empty, "n long", slices=4).count() == 0
 
 
+def test_read_places_one_slice_per_task(spark, es_stub):
+    """The slice ids are range-partitioned, not hash-exchanged: ``slices``
+    tasks, each scrolling exactly one slice."""
+    from pyspark.sql import functions as F
+
+    from tests.es_stub import _id_slice
+
+    state, url = es_stub
+    conf = _conf(url, "placed")
+    EsRestClient(conf).bulk([{"_id": f"d{i}", "n": i} for i in range(40)])
+    df = read_es_rest(spark, conf, "n long, _id string", slices=8)
+    assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString()
+    assert df.rdd.getNumPartitions() == 8
+    rows = df.select("_id", F.spark_partition_id().alias("pid")).collect()
+    slices_by_task: dict[int, set[int]] = {}
+    for r in rows:
+        slices_by_task.setdefault(r["pid"], set()).add(_id_slice(r["_id"], 8))
+    assert len(rows) == 40
+    assert sorted(s for got in slices_by_task.values() for s in got) == list(range(8))
+    assert all(len(got) == 1 for got in slices_by_task.values())
+
+
 def test_cli_stream_mode_rest_sink(spark, es_stub, tmp_path):
     """--stream with the REST sink: the availableNow foreachBatch path
     bulk-posts each micro-batch through write_es_rest; result matches the
